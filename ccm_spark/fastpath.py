@@ -9,6 +9,15 @@ shuffle join, which wins by a wide margin when each series is small
 (thousands of points) and pairs are many — the expected 100 TB regime is
 millions of pairs scaling linearly across executors with ONE shuffle total.
 
+Per direction the kernel builds the P x P distance matrix and each point's
+neighbour order (its row of the matrix stable-argsorted) once, then runs
+every lib size from them: a query's k nearest library points are the first
+k library members met walking its order, within the first
+ceil(2kP/L) + 16 positions. Queries the walk cannot settle there, and lib
+sizes where that depth reaches L, take the full gather + stable argsort
+over the L library distances. Both give the per-sample kernel's neighbours
+bit for bit (see :func:`ccm_spark.oracle.cross_map_lib_batch`).
+
 The pure-DataFrame plan (plans/cross_map.py) remains the default: it is
 the oracle-matching reference path and the right choice when a single
 series is too large for one task.
@@ -30,54 +39,34 @@ RESULT_SCHEMA = (
     "pair_id long, direction string, lib_size int, correlation double, "
     "slope double, convergent boolean"
 )
+RESULT_COLUMNS = [
+    "pair_id", "direction", "lib_size", "correlation", "slope", "convergent"
+]
+
+
+def _pair_result(pair_id: int, pdf: pd.DataFrame, config: CCMConfig) -> pd.DataFrame:
+    """One pair's (t, x, y) rows, in any order -> its RESULT_SCHEMA rows,
+    both directions."""
+    pdf = pdf.sort_values("t")
+    x = pdf["x"].to_numpy(dtype=np.float64)
+    y = pdf["y"].to_numpy(dtype=np.float64)
+    rows = []
+    for direction, _ in oracle.DIRECTIONS:
+        res = oracle.cross_map(x, y, config, direction)
+        slope, convergent = float(res["slope"]), bool(res["convergent"])
+        rows.extend(
+            (pair_id, direction, int(lib_size), float(corr), slope, convergent)
+            for lib_size, corr in res["results"]
+        )
+    return pd.DataFrame(rows, columns=RESULT_COLUMNS)
 
 
 def ccm_apply_in_pandas(series: DataFrame, config: CCMConfig) -> DataFrame:
     """(pair_id, t, x, y) -> (pair_id, direction, lib_size, correlation,
     slope, convergent), one task per pair."""
-    emb_dim, tau = config.embedding_dim, config.tau
-    num_samples, seed = config.num_samples, config.seed
-    lib_sizes = config.lib_sizes
-    radius = config.exclusion_radius
 
     def run_pair(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t")
-        x = pdf["x"].to_numpy(dtype=np.float64)
-        y = pdf["y"].to_numpy(dtype=np.float64)
-        pair_id = int(pdf["pair_id"].iloc[0])
-        cfg = CCMConfig(
-            embedding_dim=emb_dim,
-            tau=tau,
-            num_samples=num_samples,
-            lib_sizes=list(lib_sizes) if lib_sizes is not None else None,
-            seed=seed,
-            exclusion_radius=radius,
-        )
-        rows = []
-        for direction in ("x_causes_y", "y_causes_x"):
-            res = oracle.cross_map(x, y, cfg, direction)
-            for lib_size, corr in res["results"]:
-                rows.append(
-                    (
-                        pair_id,
-                        direction,
-                        int(lib_size),
-                        float(corr),
-                        float(res["slope"]),
-                        bool(res["convergent"]),
-                    )
-                )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "pair_id",
-                "direction",
-                "lib_size",
-                "correlation",
-                "slope",
-                "convergent",
-            ],
-        )
+        return _pair_result(int(pdf["pair_id"].iloc[0]), pdf, config)
 
     # Pre-partition on pair_id with an explicit count: series data is tiny
     # by bytes but each group costs a full bootstrap sweep, so AQE's
@@ -119,40 +108,13 @@ def ccm_fast_iterated(
     on layouts already proven clustered (e.g. just written by
     sinks.write_series_bucketed)."""
 
-    emb_dim, tau = config.embedding_dim, config.tau
-    num_samples, seed = config.num_samples, config.seed
-    lib_sizes = config.lib_sizes
-    radius = config.exclusion_radius
-
     def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         buf: dict[int, list[pd.DataFrame]] = {}
         for pdf in batches:
             for pid, grp in pdf.groupby("pair_id"):
                 buf.setdefault(int(pid), []).append(grp)
-        cfg = CCMConfig(
-            embedding_dim=emb_dim,
-            tau=tau,
-            num_samples=num_samples,
-            lib_sizes=list(lib_sizes) if lib_sizes is not None else None,
-            seed=seed,
-            exclusion_radius=radius,
-        )
         for pid, parts in buf.items():
-            pdf = pd.concat(parts).sort_values("t")
-            x = pdf["x"].to_numpy(dtype=np.float64)
-            y = pdf["y"].to_numpy(dtype=np.float64)
-            rows = []
-            for direction in ("x_causes_y", "y_causes_x"):
-                res = oracle.cross_map(x, y, cfg, direction)
-                for lib_size, corr in res["results"]:
-                    rows.append(
-                        (pid, direction, int(lib_size), float(corr),
-                         float(res["slope"]), bool(res["convergent"]))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["pair_id", "direction", "lib_size", "correlation", "slope", "convergent"],
-            )
+            yield _pair_result(pid, pd.concat(parts), config)
 
     out = series.mapInPandas(run_partition, schema=RESULT_SCHEMA)
     if check_clustering:

@@ -75,32 +75,15 @@ def block_cross_map(
         from ccm_spark import oracle as _o
 
         bemb, btgt = bc.value
-        dist = (
-            _o._pairwise_distances(bemb)
-            if 0 < bemb.shape[0] <= _o.PRECOMPUTE_DIST_MAX_P
-            else None
+        libs = [int(lib) for pdf in batches for lib in pdf["lib_size"]]
+        if not libs:
+            return
+        yield pd.DataFrame(
+            _o.cross_map_ladder(
+                bemb, btgt, libs, num_samples, 0, seed, eff_dim, radius
+            ),
+            columns=["lib_size", "skill"],
         )
-        for pdf in batches:
-            rows = []
-            for lib in pdf["lib_size"]:
-                lib = int(lib)
-                if dist is not None:
-                    corrs = _o.cross_map_lib_batch(
-                        bemb, btgt, lib, num_samples, 0, seed, eff_dim, dist,
-                        exclusion_radius=radius,
-                    )
-                else:
-                    # P > PRECOMPUTE_DIST_MAX_P: the (P x P) matrix would
-                    # not fit; per-sample distances, same as oracle.cross_map
-                    corrs = [
-                        _o.cross_map_sample(
-                            bemb, btgt, lib, s, 0, seed, eff_dim,
-                            dist_matrix=None, exclusion_radius=radius,
-                        )
-                        for s in range(num_samples)
-                    ]
-                rows.append((lib, float(np.sum(corrs) / num_samples)))
-            yield pd.DataFrame(rows, columns=["lib_size", "skill"])
 
     from ccm_spark.functions.partitioning import spread
 
@@ -259,20 +242,8 @@ def multispatial_ccm(
         pdf = pdf.sort_values("idx")
         bemb = pdf[e_cols].to_numpy(dtype=np.float64)
         btgt = pdf["tgt"].to_numpy(dtype=np.float64)
-        if 0 < bemb.shape[0] <= _o.PRECOMPUTE_DIST_MAX_P:
-            dist = _o._pairwise_distances(bemb)
-            corrs = _o.cross_map_lib_batch(
-                bemb, btgt, lib, num_samples, dir_id, seed, emb_dim, dist
-            )
-        else:
-            corrs = [
-                _o.cross_map_sample(
-                    bemb, btgt, lib, s, dir_id, seed, emb_dim, dist_matrix=None
-                )
-                for s in range(num_samples)
-            ]
         return pd.DataFrame(
-            [(lib, float(np.sum(corrs) / num_samples))],
+            _o.cross_map_ladder(bemb, btgt, [lib], num_samples, dir_id, seed, emb_dim),
             columns=["lib_size", "skill"],
         )
 

@@ -11,18 +11,28 @@ numpy oracle).
 
 Scale notes:
   - The join key (pair_id, dir_id, lib_size, sample_id) bounds each group's
-    cross product at (P-L) x L; a sort-merge join over those keys scales to
-    arbitrarily many groups and AQE splits stragglers. No group ever exceeds
-    a single series' footprint, so no executor OOM at 1000x pairs.
+    cross product at (P-L) x L. The join is shuffled-hash: each shuffle
+    partition builds an in-memory hash table of the library rows of every
+    group hashed to it (L rows per group) and streams the prediction rows
+    against it. That table does not spill, so executor memory must hold one
+    partition's library rows; more shuffle partitions shrink it, and no
+    single group is ever larger than one series' fan-out. The build side
+    is the library half, which is the larger half at every lib_size above
+    P/2.
+  - The (P-L) x L join output streams straight into the top-k window's
+    sort, which does spill. The window's bound is a literal (E+1), so
+    Spark plans a WindowGroupLimit that keeps at most E+1 rows per query
+    before the window runs.
   - The distance is an unrolled fixed-order codegen expression (no UDF, no
     array allocation in the hot loop).
   - Exact kNN is the oracle-matching default and the right plan when a
     SINGLE series is large (its join groups distribute; no task ever holds
-    a whole group). The many-small-pairs regime has the opt-in fast path in
-    fastpath.py (per-pair numpy kernel, one shuffle total) — same results,
-    no join materialisation. A sub-quadratic single-series index (KD-tree /
-    LSH) is deliberately not provided: it would need scipy (absent here)
-    or approximate results that break the bit-exact oracle contract.
+    a whole series' cross product). The many-small-pairs regime has the
+    opt-in fast path in fastpath.py (per-pair numpy kernel, one shuffle
+    total) — same results, no join materialisation. A sub-quadratic
+    single-series index (KD-tree / LSH) is deliberately not provided: it
+    would need scipy (absent here) or approximate results that break the
+    bit-exact oracle contract.
 """
 
 from __future__ import annotations
@@ -84,8 +94,8 @@ def knn_candidates(
     # so the per-partition build table is always safe, and SHJ drops
     # BOTH join-input sorts (at scale: O(n log n) + spill per side).
     # Same rows, same partitioning (the top-k window keeps sharing the
-    # join's exchange); the build side is the library half, the
-    # smaller side at the large lib_sizes that dominate the sweep.
+    # join's exchange); the build side is the library half (L rows per
+    # group, the larger half once L > P/2).
     joined = preds.join(libs.hint("shuffle_hash"), GROUP_KEYS)
     if exclusion_radius > 0:
         joined = joined.where(
@@ -95,12 +105,15 @@ def knn_candidates(
 
 
 def top_k_neighbors(candidates: DataFrame, embedding_dim: int) -> DataFrame:
-    """K1: keep the k = min(E+1, lib_size) nearest per query point."""
+    """K1: keep the k = min(E+1, lib_size) nearest per query point.
+
+    A query has at most lib_size candidates, so ``row_number`` never
+    exceeds lib_size and the literal bound E+1 keeps exactly k rows; a
+    literal (not a column expression) lets Spark plan a WindowGroupLimit."""
     w = Window.partitionBy(*GROUP_KEYS, "q_p").orderBy(
         F.col("dist").asc(), F.col("l_p").asc()
     )
-    k = F.least(F.lit(embedding_dim + 1), F.col("lib_size"))
     return (
         candidates.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= k)
+        .where(F.col("nn_rank") <= embedding_dim + 1)
     )

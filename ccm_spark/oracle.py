@@ -105,10 +105,11 @@ def library_split(
 
 
 #: precompute the full P x P distance matrix once per direction when the
-#: series is at most this long (memory: MAX^2 * 8 bytes = 128 MB at 4000).
-#: Bootstrap samples then reduce to submatrix selection — the distance
-#: arithmetic, the dominant cost, runs once instead of once per
-#: (lib_size, sample). Longer series fall back to per-sample distances.
+#: series is at most this long (memory: MAX^2 * 8 bytes = 128 MB at 4000,
+#: plus 64 MB for the int32 neighbour order). Bootstrap samples then reduce
+#: to submatrix selection — the distance arithmetic runs once instead of
+#: once per (lib_size, sample). Longer series fall back to per-sample
+#: distances.
 PRECOMPUTE_DIST_MAX_P = 4000
 
 
@@ -173,6 +174,78 @@ def cross_map_sample(
     return pearson(actual, predicted)
 
 
+def neighbor_order(dist_matrix: np.ndarray) -> np.ndarray:
+    """Every point's neighbour order: row i lists all point indices by
+    ascending (distance to i, index) — the stable argsort of each row of
+    the distance matrix, as int32."""
+    return np.argsort(dist_matrix, axis=1, kind="stable").astype(np.int32)
+
+
+def _gather_knn(
+    dist_matrix: np.ndarray,
+    pred: np.ndarray,
+    lib: np.ndarray,
+    k: int,
+    exclusion_radius: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """K1 by gather + stable argsort, as in :func:`cross_map_sample`:
+    queries ``pred`` (..., 1) against sorted libraries ``lib`` (..., L) ->
+    the k nearest (distances, point indices) per query, ties by ascending
+    library position, Theiler-masked points at +inf."""
+    d = dist_matrix[pred, lib]
+    if exclusion_radius > 0:
+        d = np.where(np.abs(pred - lib) <= exclusion_radius, np.inf, d)
+    nn = np.argsort(d, axis=-1, kind="stable")[..., :k]
+    return (
+        np.take_along_axis(d, nn, axis=-1),
+        np.take_along_axis(np.broadcast_to(lib, d.shape), nn, axis=-1),
+    )
+
+
+def _walk_knn(
+    dist_matrix: np.ndarray,
+    nbr_order: np.ndarray,
+    pred_idx: np.ndarray,
+    lib_idx: np.ndarray,
+    k: int,
+    exclusion_radius: int,
+    depth: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """K1 by walking each query's neighbour order: its k nearest library
+    points are the first k admissible library members met in its row of
+    ``nbr_order``. The walk covers the first ``depth`` positions; a row
+    with fewer than k admissible finite-distance hits there falls back to
+    :func:`_gather_knn`. Returns (S, Q, k) distances and point indices."""
+    s_n, q_n = pred_idx.shape
+    in_lib = np.zeros((s_n, dist_matrix.shape[0]), dtype=bool)
+    in_lib[np.arange(s_n)[:, None], lib_idx] = True
+    cand = nbr_order[:, :depth][pred_idx]  # (S, Q, T)
+    hit = in_lib[np.arange(s_n)[:, None, None], cand]
+    if exclusion_radius > 0:
+        hit &= np.abs(cand - pred_idx[:, :, None]) > exclusion_radius
+    seen = np.cumsum(hit, axis=2, dtype=np.int32)
+    ok = (seen[:, :, -1] >= k).ravel()
+    rows = np.flatnonzero(ok)
+    nn_ok = cand[hit & (seen <= k) & ok.reshape(s_n, q_n, 1)].reshape(-1, k)
+    nd_ok = dist_matrix[pred_idx.ravel()[rows, None], nn_ok]
+    # a non-finite hit means the row has fewer than k finite candidates;
+    # the gather ranks those after the finite ones together with the
+    # Theiler-masked (+inf) points, which the walk skips: gather the row
+    finite = np.isfinite(nd_ok).all(axis=1)
+    ok[rows[~finite]] = False
+    nd = np.empty((s_n * q_n, k))
+    nn = np.empty((s_n * q_n, k), dtype=np.intp)
+    nd[rows[finite]], nn[rows[finite]] = nd_ok[finite], nn_ok[finite]
+    miss = np.flatnonzero(~ok)
+    if len(miss):
+        s_m, q_m = np.divmod(miss, q_n)
+        nd[miss], nn[miss] = _gather_knn(
+            dist_matrix, pred_idx[s_m, q_m][:, None], lib_idx[s_m], k,
+            exclusion_radius,
+        )
+    return nd.reshape(s_n, q_n, k), nn.reshape(s_n, q_n, k)
+
+
 def cross_map_lib_batch(
     emb: np.ndarray,
     tgt: np.ndarray,
@@ -183,15 +256,28 @@ def cross_map_lib_batch(
     embedding_dim: int,
     dist_matrix: np.ndarray,
     exclusion_radius: int = 0,
+    nbr_order: np.ndarray | None = None,
 ) -> np.ndarray:
     """All bootstrap samples of one lib_size in a single vectorised pass.
 
-    Identical arithmetic to :func:`cross_map_sample` (same expressions, same
-    dtypes, same stable-sort tie-breaks, same Theiler-window masking),
-    batched over the sample axis —
-    this removes the per-sample Python loop that dominated the fleet path.
-    Requires the precomputed distance matrix (all samples share it; the
-    P > PRECOMPUTE_DIST_MAX_P regime keeps the per-sample loop).
+    Bit-identical to stacking :func:`cross_map_sample` over the samples
+    (same distances, same tie rule, same Theiler-window masking, same W1 /
+    P1 / R1 expressions) — this removes the per-sample Python loop that
+    dominated the fleet path. Requires the precomputed distance matrix
+    (all samples share it; the P > PRECOMPUTE_DIST_MAX_P regime keeps the
+    per-sample loop).
+
+    K1 walks the neighbour order (:func:`neighbor_order`, computed here
+    unless passed in) instead of sorting all L library distances per
+    query: a list sorted by (distance, point index) keeps that order when
+    restricted to one sample's library, and since the library is sorted
+    by index that order is exactly the per-sample tie rule, so a query's
+    k nearest are the first k admissible library points met in its row.
+    The k-th hit is expected near position kP/L, so the walk covers the
+    first T = min(P, ceil(2kP/L) + 16) positions; rows with fewer than k
+    admissible finite-distance hits there (Theiler window, NaN input, an
+    unlucky draw), and every row of a lib size with T >= L, take the
+    gather + stable argsort of :func:`cross_map_sample`.
     Returns the (num_samples,) skill vector, 0.0 on degenerate guards.
     """
     p = emb.shape[0]
@@ -205,25 +291,24 @@ def cross_map_lib_batch(
     order = np.argsort(key * p + idx[None, :], axis=1, kind="stable")
     lib_idx = np.sort(order[:, :lib_size], axis=1)  # (S, L)
     pred_idx = np.sort(order[:, lib_size:], axis=1)  # (S, Q)
-    s_n, q_n, l_n = num_samples, pred_idx.shape[1], lib_size
-    d = dist_matrix[pred_idx[:, :, None], lib_idx[:, None, :]]  # (S, Q, L)
-    if exclusion_radius > 0:
-        d = np.where(
-            np.abs(pred_idx[:, :, None] - lib_idx[:, None, :])
-            <= exclusion_radius,
-            np.inf,
-            d,
-        )
+    q_n = pred_idx.shape[1]
     k = min(embedding_dim + 1, lib_size)
-    nn = np.argsort(d, axis=2, kind="stable")[:, :, :k]  # K1, ties by lib pos
-    nd = np.take_along_axis(d, nn, axis=2)
+    depth = min(p, -(-2 * k * p // lib_size) + 16)
+    if depth < lib_size:  # K1
+        if nbr_order is None:
+            nbr_order = neighbor_order(dist_matrix)
+        nd, global_nn = _walk_knn(
+            dist_matrix, nbr_order, pred_idx, lib_idx, k, exclusion_radius, depth
+        )
+    else:
+        nd, global_nn = _gather_knn(
+            dist_matrix, pred_idx[:, :, None], lib_idx[:, None, :], k,
+            exclusion_radius,
+        )
     min_d = nd.min(axis=2, keepdims=True)
     w = np.where(nd < 1e-12, 1.0, np.exp(-nd / (min_d + 1e-8)))  # W1
     if exclusion_radius > 0:
         w = np.where(np.isinf(nd), 0.0, w)
-    global_nn = np.take_along_axis(
-        np.broadcast_to(lib_idx[:, None, :], (s_n, q_n, l_n)), nn, axis=2
-    )
     neighbor_targets = tgt[global_nn]  # (S, Q, k)
     wsum = w.sum(axis=2)
     predicted = np.where(  # P1
@@ -246,6 +331,46 @@ def cross_map_lib_batch(
     return np.where(degen, 0.0, (q_n * sab - sa * sb) / den)
 
 
+def cross_map_ladder(
+    emb: np.ndarray,
+    tgt: np.ndarray,
+    lib_sizes: list[int],
+    num_samples: int,
+    dir_id: int,
+    seed: int,
+    embedding_dim: int,
+    exclusion_radius: int = 0,
+) -> list[tuple[int, float]]:
+    """R2 over a lib-size ladder for one embedding: [(lib_size, mean skill)].
+
+    Up to PRECOMPUTE_DIST_MAX_P points, the distance matrix and the
+    neighbour order are built once and every lib size runs
+    :func:`cross_map_lib_batch` on them; longer embeddings loop over
+    :func:`cross_map_sample` with per-sample distances."""
+    if 0 < emb.shape[0] <= PRECOMPUTE_DIST_MAX_P:
+        dist_matrix = _pairwise_distances(emb)
+        nbr_order = neighbor_order(dist_matrix)
+
+        def skills(lib_size):
+            return cross_map_lib_batch(
+                emb, tgt, lib_size, num_samples, dir_id, seed, embedding_dim,
+                dist_matrix, exclusion_radius, nbr_order,
+            )
+    else:
+
+        def skills(lib_size):
+            return [
+                cross_map_sample(
+                    emb, tgt, lib_size, s, dir_id, seed, embedding_dim,
+                    exclusion_radius=exclusion_radius,
+                )
+                for s in range(num_samples)
+            ]
+
+    # R2: the reference divides by num_samples (lib/ccm.ex:59-67)
+    return [(ls, float(np.sum(skills(ls)) / num_samples)) for ls in lib_sizes]
+
+
 def cross_map(
     x: np.ndarray, y: np.ndarray, config: CCMConfig, direction: str
 ) -> dict:
@@ -257,29 +382,10 @@ def cross_map(
     source, target = (y, x) if direction == "x_causes_y" else (x, y)
     emb = time_delay_embedding(source, config.embedding_dim, config.tau)
     tgt = adjusted_target(target, config.embedding_dim, config.tau)
-    lib_sizes = config.resolved_lib_sizes(len(x))
-    dist_matrix = (
-        _pairwise_distances(emb) if 0 < emb.shape[0] <= PRECOMPUTE_DIST_MAX_P else None
+    results = cross_map_ladder(
+        emb, tgt, config.resolved_lib_sizes(len(x)), config.num_samples,
+        dir_id, config.seed, config.embedding_dim, config.exclusion_radius,
     )
-    results = []
-    radius = config.exclusion_radius
-    for lib_size in lib_sizes:
-        if dist_matrix is not None:
-            corrs = cross_map_lib_batch(
-                emb, tgt, lib_size, config.num_samples, dir_id, config.seed,
-                config.embedding_dim, dist_matrix, exclusion_radius=radius,
-            )
-        else:
-            corrs = [
-                cross_map_sample(
-                    emb, tgt, lib_size, s, dir_id, config.seed,
-                    config.embedding_dim, dist_matrix=None,
-                    exclusion_radius=radius,
-                )
-                for s in range(config.num_samples)
-            ]
-        # R2: the reference divides by num_samples (lib/ccm.ex:59-67)
-        results.append((lib_size, float(np.sum(corrs) / config.num_samples)))
     ls = np.array([r[0] for r in results], dtype=np.float64)
     cs = np.array([r[1] for r in results], dtype=np.float64)
     slope, convergent = ols_slope(ls, cs)

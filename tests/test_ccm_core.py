@@ -160,30 +160,88 @@ def test_exclusion_radius_plan_matches_oracle(spark, direction):
     assert want != base  # the window changed the neighbour sets
 
 
-def test_exclusion_radius_batched_kernel_matches_per_sample():
-    """The vectorised lib-batch kernel and the per-sample kernel must
-    agree bit-for-bit under masking (incl. the inf-row weight guard)."""
+def _theiler_case():
     x, y = coupled_series(length=70, coupling=0.3, noise_level=0.0)
-    emb = oracle.time_delay_embedding(np.asarray(y), 3, 1)
-    tgt = oracle.adjusted_target(np.asarray(x), 3, 1)
+    return np.asarray(y), np.asarray(x), [25, 40, 50], 6, (1, 5, 20)
+
+
+def _theiler_fallback_case():
+    # a random walk's nearest states are its temporal neighbours, so a
+    # wide window leaves rows with too few admissible hits for the walk
+    x, _ = coupled_series(length=120, coupling=0.3, noise_level=0.0)
+    walk = np.cumsum(np.random.default_rng(4).normal(size=120))
+    return walk, np.asarray(x), [25, 60, 90], 6, (1, 5, 20)
+
+
+def _nan_case():
+    x, y = coupled_series(length=120, coupling=0.4, noise_level=0.02, seed=3)
+    source = np.asarray(y).copy()
+    source[[10, 50, 51]] = np.nan
+    return source, np.asarray(x), [12, 60, 110], 6, (0, 3)
+
+
+def _auto_ladder_case():
+    x, y = coupled_series(length=300, coupling=0.4, noise_level=0.02, seed=7)
+    return np.asarray(y), np.asarray(x), generate_lib_sizes(298), 10, (0,)
+
+
+def _ties_case():
+    x, y = coupled_series(length=150, coupling=0.4, noise_level=0.02, seed=3)
+    return np.round(np.asarray(y), 1), np.asarray(x), [15, 60, 120], 8, (0, 2)
+
+
+def _constant_case():
+    x, _ = coupled_series(length=120, coupling=0.4, noise_level=0.02, seed=3)
+    return np.full(120, 0.5), np.asarray(x), [12, 60, 110], 8, (0, 3)
+
+
+def _tiny_lib_case():
+    x, y = coupled_series(length=70, coupling=0.3, noise_level=0.02, seed=5)
+    return np.asarray(y), np.asarray(x), [1, 2, 3, 4], 6, (0, 1)
+
+
+@pytest.mark.filterwarnings("ignore:invalid value:RuntimeWarning")
+@pytest.mark.parametrize(
+    "case",
+    [
+        _theiler_case, _theiler_fallback_case, _nan_case, _auto_ladder_case,
+        _ties_case, _constant_case, _tiny_lib_case,
+    ],
+    ids=[
+        "theiler", "theiler_fallback", "nan", "auto_ladder", "ties",
+        "constant", "tiny_lib",
+    ],
+)
+def test_exclusion_radius_batched_kernel_matches_per_sample(case):
+    """The vectorised lib-batch kernel and the per-sample kernel must
+    agree bit-for-bit: under Theiler masking (incl. the inf-row weight
+    guard and the walk's fallback rows), with NaN input, on every
+    auto-ladder lib size at N=300 (gather below the walk depth,
+    neighbour-order walk above it), under distance ties and all-zero
+    distances, and at L <= E+1."""
+    source, target, lib_sizes, num_samples, radii = case()
+    emb = oracle.time_delay_embedding(source, 3, 1)
+    tgt = oracle.adjusted_target(target, 3, 1)
     dm = oracle._pairwise_distances(emb)
-    for radius in (1, 5, 20):
-        batch = oracle.cross_map_lib_batch(
-            emb, tgt, 25, 6, 0, 11, 3, dm, exclusion_radius=radius
-        )
-        singles = [
-            oracle.cross_map_sample(
-                emb, tgt, 25, s, 0, 11, 3, dist_matrix=dm,
+    for radius in radii:
+        for lib_size in lib_sizes:
+            batch = oracle.cross_map_lib_batch(
+                emb, tgt, lib_size, num_samples, 0, 11, 3, dm,
                 exclusion_radius=radius,
             )
-            for s in range(6)
-        ]
-        np.testing.assert_array_equal(batch, np.array(singles))
+            singles = [
+                oracle.cross_map_sample(
+                    emb, tgt, lib_size, s, 0, 11, 3, dist_matrix=dm,
+                    exclusion_radius=radius,
+                )
+                for s in range(num_samples)
+            ]
+            np.testing.assert_array_equal(batch, np.array(singles))
 
 
 def test_exclusion_radius_fastpath_and_api(spark):
     """The applyInPandas fast path carries the radius through its
-    closure-rebuilt config; the CCM API exposes it; negatives raise."""
+    closure's config; the CCM API exposes it; negatives raise."""
     from ccm_spark.fastpath import ccm_apply_in_pandas
 
     x, y = coupled_series(length=80, coupling=0.4, noise_level=0.02, seed=7)
