@@ -63,27 +63,18 @@ def _pair_result(pair_id: int, pdf: pd.DataFrame, config: CCMConfig) -> pd.DataF
 
 def ccm_apply_in_pandas(series: DataFrame, config: CCMConfig) -> DataFrame:
     """(pair_id, t, x, y) -> (pair_id, direction, lib_size, correlation,
-    slope, convergent), one task per pair."""
+    slope, convergent). One shuffle: each core's task runs the sweeps of
+    one balanced range of pairs (see
+    :func:`ccm_spark.functions.partitioning.apply_per_key`)."""
 
     def run_pair(pdf: pd.DataFrame) -> pd.DataFrame:
         return _pair_result(int(pdf["pair_id"].iloc[0]), pdf, config)
 
-    # Pre-partition on pair_id with an explicit count: series data is tiny
-    # by bytes but each group costs a full bootstrap sweep, so AQE's
-    # byte-based coalescing would fold the groupBy exchange to ONE task and
-    # serialise the fleet (observed: 64 pairs x 0.45s kernel = 28.9s wall).
-    # The explicit repartition satisfies the groupBy's distribution
-    # requirement, is exempt from coalescing, and costs nothing extra — the
-    # shuffle was happening anyway. factor=8: each pair is a multi-hundred-
-    # millisecond kernel, so tasks must be finer than cores or the worst
-    # hash bucket (~4-5 pairs at 64 keys / 32 buckets) sets the wall time.
-    from ccm_spark.functions.partitioning import spread
+    # One partition per core, not per pair: a Python task costs ~0.2 s to
+    # start, more than one pair's sweep, so finer tasks only add launches.
+    from ccm_spark.functions.partitioning import apply_per_key
 
-    return (
-        spread(series, "pair_id", factor=8)
-        .groupBy("pair_id")
-        .applyInPandas(run_pair, schema=RESULT_SCHEMA)
-    )
+    return apply_per_key(series, "pair_id", run_pair, RESULT_SCHEMA)
 
 
 def ccm_fast_iterated(

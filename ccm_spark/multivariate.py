@@ -377,13 +377,9 @@ def smap_interactions_fleet(
                 rows.append((pair_id, t, term, float(coefs[t, j])))
         return pd.DataFrame(rows, columns=cols)
 
-    from ccm_spark.functions.partitioning import spread
+    from ccm_spark.functions.partitioning import apply_per_key
 
-    return (
-        spread(series, "pair_id", factor=8)
-        .groupBy("pair_id")
-        .applyInPandas(run_pair, schema=INTERACTIONS_FLEET_SCHEMA)
-    )
+    return apply_per_key(series, "pair_id", run_pair, INTERACTIONS_FLEET_SCHEMA)
 
 
 def multiview_forecast(

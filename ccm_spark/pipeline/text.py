@@ -1027,6 +1027,12 @@ def tfidf_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     df relation joins on term — skew-free because stopword-heavy terms
     are spread across doc partitions before the per-doc window.
     Returns ``(doc_id, rank, term, tf, score)``.
+
+    The per-(doc, term) tf aggregate feeds both the df rollup and the
+    scoring join, so it is persisted (MEMORY_AND_DISK, distinct terms per
+    doc) and attached to the result as ``_ccm_persisted`` — call
+    ``plans.cross_map.release_cached(result)`` after the terminal action
+    in long-lived sessions.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -1038,8 +1044,7 @@ def tfidf_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     # aggregate ran twice (two physical subtrees, plans/r16/
     # tfidf_terms_before.txt). Persist the (doc, term)-aggregated
     # relation once; it is distinct-term-per-doc sized, far below the
-    # occurrence relation. Attached as ``_ccm_persisted`` for
-    # ``plans.cross_map.release_cached``.
+    # occurrence relation.
     tf = (
         occ.groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))

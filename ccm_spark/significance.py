@@ -302,9 +302,10 @@ def ccm_significance_fleet(
     style). Offsets are keyed on (surrogate_seed, pair_id, k), so every
     pair draws an independent, reproducible surrogate set, and pair
     verdicts are identical to running :func:`ccm_significance` per pair
-    with that pair's derived seed. ``spread(factor=8)``: each task is
-    K+1 kernels — finer-than-core granularity rebalances stragglers
-    (SCALE.md, fleet section).
+    with that pair's derived seed. Pairs run through ``apply_per_key``:
+    one range partition per core. Range bounds already balance the
+    partitions by row count, so splitting finer only adds Python task
+    launches.
     """
     if direction not in ("x_causes_y", "y_causes_x"):
         raise ValueError(
@@ -395,13 +396,9 @@ def ccm_significance_fleet(
             ],
         )
 
-    from ccm_spark.functions.partitioning import spread
+    from ccm_spark.functions.partitioning import apply_per_key
 
-    return (
-        spread(series, "pair_id", factor=8)
-        .groupBy("pair_id")
-        .applyInPandas(run_pair, schema=SIGNIFICANCE_FLEET_SCHEMA)
-    )
+    return apply_per_key(series, "pair_id", run_pair, SIGNIFICANCE_FLEET_SCHEMA)
 
 
 def embedding_scan(
@@ -647,8 +644,9 @@ def embedding_scan_fleet(
     identical best-cell tie-break), so each fleet row bit-matches the
     single-series scan on that series' values (test-pinned). The whole
     grid runs INSIDE each series' ``applyInPandas`` task — fastpath
-    shape: one shuffle on series_id, ``spread(factor=8)`` for scheduler
-    rebalancing, numpy kernels in-task, one verdict row back per series.
+    shape: one shuffle on series_id into one balanced range partition per
+    core (``apply_per_key``), numpy kernels in-task, one verdict row back
+    per series.
     Series shorter than ``min_points`` are dropped (a corpus screen must
     not abort on one degenerate member; filter/inspect them separately).
     """
@@ -694,13 +692,9 @@ def embedding_scan_fleet(
             columns=cols,
         )
 
-    from ccm_spark.functions.partitioning import spread
+    from ccm_spark.functions.partitioning import apply_per_key
 
-    return (
-        spread(series, "series_id", factor=8)
-        .groupBy("series_id")
-        .applyInPandas(run_series, schema=EMBEDDING_FLEET_SCHEMA)
-    )
+    return apply_per_key(series, "series_id", run_series, EMBEDDING_FLEET_SCHEMA)
 
 
 LAG_FLEET_SCHEMA = (
@@ -775,13 +769,9 @@ def ccm_lag_scan_fleet(
             columns=cols,
         )
 
-    from ccm_spark.functions.partitioning import spread
+    from ccm_spark.functions.partitioning import apply_per_key
 
-    return (
-        spread(series, "pair_id", factor=8)
-        .groupBy("pair_id")
-        .applyInPandas(run_pair, schema=LAG_FLEET_SCHEMA)
-    )
+    return apply_per_key(series, "pair_id", run_pair, LAG_FLEET_SCHEMA)
 
 
 HORIZON_FLEET_SCHEMA = (
@@ -850,13 +840,9 @@ def forecast_horizon_scan_fleet(
             columns=cols,
         )
 
-    from ccm_spark.functions.partitioning import spread
+    from ccm_spark.functions.partitioning import apply_per_key
 
-    return (
-        spread(series, "series_id", factor=8)
-        .groupBy("series_id")
-        .applyInPandas(run_series, schema=HORIZON_FLEET_SCHEMA)
-    )
+    return apply_per_key(series, "series_id", run_series, HORIZON_FLEET_SCHEMA)
 
 
 def simplex_forecast(
@@ -952,13 +938,9 @@ def simplex_forecast_fleet(
             rows.append((sid, int(h), float(pred[0])))
         return pd.DataFrame(rows, columns=cols)
 
-    from ccm_spark.functions.partitioning import spread
+    from ccm_spark.functions.partitioning import apply_per_key
 
-    return (
-        spread(series, "series_id", factor=8)
-        .groupBy("series_id")
-        .applyInPandas(run_series, schema=FORECAST_FLEET_SCHEMA)
-    )
+    return apply_per_key(series, "series_id", run_series, FORECAST_FLEET_SCHEMA)
 
 
 NONLINEARITY_FLEET_SCHEMA = (
@@ -980,9 +962,9 @@ def smap_nonlinearity_fleet(
     dependence is a prerequisite for cross mapping to mean anything).
 
     The whole theta grid runs INSIDE each series' ``applyInPandas`` task
-    (fastpath shape: one shuffle on series_id, ``spread(factor=8)``
-    for scheduler rebalancing, numpy kernels in-task); emits one verdict
-    row per series.
+    (fastpath shape: one shuffle on series_id into one balanced range
+    partition per core, numpy kernels in-task); emits one verdict row per
+    series.
     """
     th = list(DEFAULT_THETAS) if thetas is None else [float(t) for t in thetas]
     if 0.0 not in th:
@@ -1018,13 +1000,9 @@ def smap_nonlinearity_fleet(
             ],
         )
 
-    from ccm_spark.functions.partitioning import spread
+    from ccm_spark.functions.partitioning import apply_per_key
 
-    return (
-        spread(series, "series_id", factor=8)
-        .groupBy("series_id")
-        .applyInPandas(run_series, schema=NONLINEARITY_FLEET_SCHEMA)
-    )
+    return apply_per_key(series, "series_id", run_series, NONLINEARITY_FLEET_SCHEMA)
 
 
 def benjamini_hochberg(

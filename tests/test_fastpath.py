@@ -53,3 +53,38 @@ def test_fast_iterated_rejects_unclustered_input(spark, two_pairs):
     scattered = two_pairs.repartition(8)  # round-robin: pairs span partitions
     with pytest.raises(SparkRuntimeException, match="span partition boundaries"):
         ccm_fast_iterated(scattered, cfg).collect()
+
+
+@pytest.fixture(scope="module")
+def uneven_fleet(spark):
+    """Six pairs of 40-90 points under sparse, signed, wide pair ids."""
+    ids = [-5, 0, 7, 12, 10**9 + 3, 2**40 + 1]
+    pairs = []
+    for i, pid in enumerate(ids):
+        x, y = coupled_series(
+            length=40 + 10 * i, coupling=0.3 * (i % 2), noise_level=0.03, seed=70 + i
+        )
+        pairs.append((pid, x, y))
+    return pairs, spark.createDataFrame(pairs_to_pdf(pairs))
+
+
+def test_fastpath_fleet_is_oracle_exact_under_any_input_geometry(spark, uneven_fleet):
+    """Unequal lengths (auto ladders differ per pair) and sparse ids: each
+    pair's rows are exactly oracle.cross_map's, and how the input arrives
+    partitioned (one partition, round-robin, hashed by pair) changes
+    nothing."""
+    from ccm_spark import oracle
+
+    pairs, df = uneven_fleet
+    cfg = CCMConfig(num_samples=3, seed=29)
+    expected = sorted(
+        (pid, direction, int(lib_size), float(corr), float(res["slope"]),
+         bool(res["convergent"]))
+        for pid, x, y in pairs
+        for direction, _ in oracle.DIRECTIONS
+        for res in [oracle.cross_map(x, y, cfg, direction)]
+        for lib_size, corr in res["results"]
+    )
+    for geometry in (df.coalesce(1), df.repartition(7), df.repartition("pair_id")):
+        got = sorted(tuple(r) for r in ccm_apply_in_pandas(geometry, cfg).collect())
+        assert got == expected

@@ -447,3 +447,28 @@ def test_interval_join_plans_no_nested_loop(spark):
     plan = _formatted_plan(interval_join(intervals, events, bucket_us=1000))
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
     assert "Join" in plan
+
+
+def test_fleet_kernels_run_one_range_partition_per_core(spark):
+    """The per-key Python kernels (CCM fast path, the significance fleet
+    scans) shuffle once, by range, into exactly defaultParallelism
+    partitions: a Python task costs ~0.2 s to start, so a return to
+    per-pair hash tasks is a throughput regression this pins."""
+    from ccm_spark.config import CCMConfig
+    from ccm_spark.fastpath import ccm_apply_in_pandas
+    from ccm_spark.significance import ccm_lag_scan_fleet
+
+    series = spark.createDataFrame(
+        [(p, t, float(t), float(t * p)) for p in range(3) for t in range(40)],
+        "pair_id long, t long, x double, y double",
+    )
+    cfg = CCMConfig(num_samples=2, lib_sizes=[20], seed=1)
+    n = spark.sparkContext.defaultParallelism
+    for out in (ccm_apply_in_pandas(series, cfg), ccm_lag_scan_fleet(series, cfg)):
+        plan = _formatted_plan(out)
+        assert _n_exchanges(plan) == 1
+        assert re.search(
+            rf"Arguments: rangepartitioning\(pair_id#\d+L ASC NULLS FIRST, {n}\)",
+            plan,
+        )
+        assert len(re.findall(r"\(\d+\) FlatMapGroupsInPandas", plan)) == 1
